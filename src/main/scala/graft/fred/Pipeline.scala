@@ -2,6 +2,8 @@ package graft.fred
 
 import java.time.LocalDate
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,16 +57,20 @@ class Pipeline(spark: SparkSession, source: FredSource, lakeRoot: String,
   }
 
   /** Extract one indicator over [start, end]: month-ranged API calls
-    * (C8), bronze shaping (B1-B3, C1-C2), partitioned JSON-lines write
-    * (H1). One write per month mirrors the reference's per-month
-    * S3 object (`extract_fred_data.py:238-290`). */
+    * (C8), parsed on the driver, bronze shaping (B1-B3, C1-C2), one
+    * partitioned JSON-lines write for the whole window (H1). The rows
+    * are driver-fetched and window-sized by construction, so the frame
+    * is coalesced to one writer task: still one file per month leaf,
+    * the reference's per-month S3 object (`extract_fred_data.py:238-290`).
+    * A failed fetch writes nothing; the layer retry re-fetches the
+    * window. */
   def extract(seriesId: String, start: LocalDate, end: LocalDate): Unit =
     withRetry("extract") {
-      FredSource.monthRanges(start, end).foreach { case (first, last) =>
-        val obs = FredSource.observations(
-          spark, source.fetchMonth(seriesId, first, last))
-        LakeIO.writeBronze(Derive.toBronze(obs, seriesId), bronzeRoot)
+      val rows = FredSource.monthRanges(start, end).flatMap { case (first, last) =>
+        FredSource.parse(source.fetchMonth(seriesId, first, last))
       }
+      val obs = spark.createDataFrame(rows.asJava, Schemas.observation).coalesce(1)
+      LakeIO.writeBronze(Derive.toBronze(obs, seriesId), bronzeRoot)
     }
 
   /** Transform bronze months of one indicator to silver monthly grain:

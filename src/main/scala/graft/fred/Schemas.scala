@@ -14,6 +14,14 @@ import org.apache.spark.sql.types._
   */
 object Schemas {
 
+  /** One observation of a FRED `series/observations` response, both
+    * fields kept as their JSON text: `'.'` sentinels and unparsable
+    * values reach [[graft.fred.ops.Clean]] unchanged, a JSON `null`
+    * stays null. */
+  val observation: StructType = StructType(Seq(
+    StructField("date", StringType, nullable = true),
+    StructField("value", StringType, nullable = true)))
+
   /** Bronze: raw observations, one row per (indicator, date).
     * Columns and order from `extract_fred_data.py:177-186`. */
   val bronze: StructType = StructType(Seq(

@@ -1,13 +1,19 @@
 package graft.fred.io
 
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{DeserializationFeature, JsonNode}
+import com.fasterxml.jackson.databind.cfg.JsonNodeFeature
+import com.fasterxml.jackson.databind.json.JsonMapper
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** G1 — the FRED `series/observations` REST source.
   *
   * An API that returns at most thousands of rows per call must not be a
-  * distributed scan: fetch on the driver, parallelize the result
-  * (`extract_fred_data.py:94-139`). The trait lets tests inject fixture
+  * distributed scan: fetch and parse on the driver, hand Spark a local
+  * frame (`extract_fred_data.py:94-139`). The trait lets tests inject fixture
   * JSON; `HttpFredSource` is the real client with the reference's retry
   * posture (3 retries, backoff, honor 429; `extract_fred_data.py:74-77,
   * 105-110`).
@@ -33,21 +39,37 @@ object FredSource {
       .toSeq
   }
 
-  /** Parse one raw FRED response into a DataFrame of the observation
-    * array. Shape-validated like `extract_fred_data.py:116-129`: an
-    * `observations` list must be present, each element carrying
-    * `date` + `value`. */
-  def observations(spark: SparkSession, responseJson: String): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions._
-    val raw = spark.read.json(Seq(responseJson).toDS())
-    require(raw.columns.contains("observations"),
-      "FRED response missing 'observations'")
-    val obs = raw.select(explode(col("observations")).as("o")).select("o.*")
-    require(Seq("date", "value").forall(obs.columns.contains),
-      "FRED observation missing date/value")
-    obs
+  /** Floats parse to `BigDecimal` with their trailing zeros, so an
+    * unquoted `4.10` keeps its text instead of becoming `4.1`. */
+  private val json = JsonMapper.builder()
+    .enable(DeserializationFeature.USE_BIG_DECIMAL_FOR_FLOATS)
+    .disable(JsonNodeFeature.STRIP_TRAILING_BIGDECIMAL_ZEROES)
+    .build()
+
+  /** Parse one raw FRED response into its observations, as rows of
+    * [[graft.fred.Schemas.observation]]. Shape-validated like
+    * `extract_fred_data.py:116-129`: an `observations` list must be
+    * present, each element carrying `date` + `value`. Parsed on the
+    * driver: a response is one month of one series, so no Spark job is
+    * worth spending on it. Scalars keep their JSON text, a JSON `null`
+    * stays null, other fields (`realtime_*`) are ignored. */
+  def parse(responseJson: String): IndexedSeq[Row] = {
+    val obs = json.readTree(responseJson).get("observations")
+    require(obs != null && obs.isArray, "FRED response missing 'observations'")
+    obs.elements().asScala.map { o =>
+      val (date, value) = (o.get("date"), o.get("value"))
+      require(date != null && value != null, "FRED observation missing date/value")
+      Row(text(date), text(value))
+    }.toIndexedSeq
   }
+
+  /** null for JSON `null`, the text of a scalar, compact JSON otherwise. */
+  private def text(n: JsonNode): String =
+    if (n.isNull) null else if (n.isValueNode) n.asText() else n.toString
+
+  /** [[parse]] as a local frame of [[graft.fred.Schemas.observation]]. */
+  def observations(spark: SparkSession, responseJson: String): DataFrame =
+    spark.createDataFrame(parse(responseJson).asJava, graft.fred.Schemas.observation)
 
   /** Fixture-backed source for tests. */
   class Fixture(byMonth: Map[(String, Int, Int), String]) extends FredSource {

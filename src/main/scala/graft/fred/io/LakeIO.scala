@@ -1,6 +1,6 @@
 package graft.fred.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Partitioned-lake read/write (G2, G3, H1, H2).
@@ -20,14 +20,18 @@ object LakeIO {
 
   val PartitionCols: Seq[String] = Seq("indicator", "observation_year", "observation_month")
 
-  private def dynamicOverwrite(spark: SparkSession): Unit =
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+  /** Overwrite only the partitions present in `df`. The per-write
+    * option wins over the session's `partitionOverwriteMode`, which is
+    * left as the caller set it. */
+  private def overwritePartitions(df: DataFrame,
+      partitionCols: Seq[String]): DataFrameWriter[Row] =
+    df.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*)
 
   /** H1: bronze JSON-lines write, partition-overwriting (`extract_fred_data.py:213-226`). */
-  def writeBronze(df: DataFrame, root: String): Unit = {
-    dynamicOverwrite(df.sparkSession)
-    df.write.mode(SaveMode.Overwrite).partitionBy(PartitionCols: _*).json(root)
-  }
+  def writeBronze(df: DataFrame, root: String): Unit =
+    overwritePartitions(df, PartitionCols).json(root)
 
   /** G2: bronze read with explicit schema — never infer
     * (`transform_fred_data.py:83` re-infers per file; SURVEY §7.4.4). */
@@ -44,10 +48,8 @@ object LakeIO {
   /** H2: silver/gold parquet write, partition-overwriting
     * (`transform_fred_data.py:150-175`, `aggregate_fred_data.py:64-86`). */
   def writeParquet(df: DataFrame, root: String,
-      partitionCols: Seq[String] = PartitionCols): Unit = {
-    dynamicOverwrite(df.sparkSession)
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).parquet(root)
-  }
+      partitionCols: Seq[String] = PartitionCols): Unit =
+    overwritePartitions(df, partitionCols).parquet(root)
 
   /** G3: partitioned parquet read; missing partitions simply yield no
     * rows (the reference swallows per-file NoSuchKey into empty frames,
@@ -91,10 +93,8 @@ object LakeIO {
     * columnar with predicate-pushdown stats; the operators above are
     * format-agnostic). */
   def writeOrc(df: DataFrame, root: String,
-      partitionCols: Seq[String] = PartitionCols): Unit = {
-    dynamicOverwrite(df.sparkSession)
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*).orc(root)
-  }
+      partitionCols: Seq[String] = PartitionCols): Unit =
+    overwritePartitions(df, partitionCols).orc(root)
 
   def readOrc(spark: SparkSession, root: String): DataFrame =
     spark.read.orc(root)

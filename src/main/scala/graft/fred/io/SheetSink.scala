@@ -1,5 +1,7 @@
 package graft.fred.io
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
@@ -17,9 +19,10 @@ import org.apache.spark.sql.types.StructType
   * appends via a row-loop over a client handle), so the collect here is
   * the honest shape — guarded by `maxAppendRows` so a mis-pointed lake
   * scan fails loudly instead of materializing unbounded rows on the
-  * driver. The dedup half stays fully distributed: a broadcast
-  * left-anti join ([[graft.fred.ops.DedupSync.newRows]]) against the
-  * sheet's (small) key set.
+  * driver. The dedup runs the same way the reference's does: the
+  * sheet's key set is collected into a driver-side `Set` (bounded by
+  * the sheet, which is small by construction) and the incoming frame
+  * is filtered against it in its own tasks — no join, no broadcast.
   */
 trait SheetSink {
   /** Column shape of the sheet. */
@@ -37,7 +40,7 @@ object SheetSink {
     private val buf = scala.collection.mutable.ArrayBuffer.empty[Row]
     def read(spark: SparkSession): DataFrame = {
       val snapshot = synchronized { buf.toList }
-      spark.createDataFrame(spark.sparkContext.parallelize(snapshot), schema)
+      spark.createDataFrame(snapshot.asJava, schema)
     }
     def append(rows: Seq[Row]): Unit = synchronized { buf ++= rows }
     def size: Int = synchronized { buf.size }
@@ -47,13 +50,23 @@ object SheetSink {
     * the sheet are appended; returns the number appended. Idempotent —
     * a second sync of the same frame appends nothing
     * (`load_fred_data_to_google.py:108-131`).
+    *
+    * `incoming` is projected and cast to the sheet's schema, so keys
+    * compare as the sheet types them. Semantics are
+    * [[graft.fred.ops.DedupSync.newRows]]' `left_anti`: a key holding a
+    * null never matches, so such sheet keys are left out of the set
+    * and such incoming rows are always appended.
     */
   def syncAppend(incoming: DataFrame, sink: SheetSink,
       keys: Seq[String] = graft.fred.Schemas.servingKey,
       maxAppendRows: Int = 100000): Long = {
-    val fresh = graft.fred.ops.DedupSync
-      .newRows(incoming, sink.read(incoming.sparkSession), keys)
-      .select(sink.schema.fieldNames.map(col).toSeq: _*)
+    val present: Set[Seq[Any]] = sink.read(incoming.sparkSession)
+      .select(keys.map(col): _*).collect().iterator
+      .map(_.toSeq).filterNot(_.contains(null)).toSet
+    val projected = incoming.select(
+      sink.schema.fields.map(f => col(f.name).cast(f.dataType)).toSeq: _*)
+    val keyAt = keys.map(projected.schema.fieldIndex)
+    val fresh = projected.filter(r => !present.contains(keyAt.map(r.get)))
     val rows = fresh.limit(maxAppendRows + 1).collect()
     require(rows.length <= maxAppendRows,
       s"refusing to append > $maxAppendRows rows to a sheet sink — " +

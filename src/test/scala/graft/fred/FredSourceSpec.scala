@@ -1,16 +1,17 @@
 package graft.fred
 
 import java.time.LocalDate
-import org.scalatest.funsuite.AnyFunSuite
+import graft.SparkSpec
 import graft.fred.io.FredSource
 
 /** G1 timing behavior: inter-call throttle (`extract_fred_data.py:284`
   * sleeps 5 s between month calls) and Retry-After parsing (RFC 9110
   * allows delta-seconds OR an HTTP-date; the latter must fall back to
   * linear backoff, not abort the retry loop). All tested with a fake
-  * clock/transport — no network, no real sleeping.
+  * clock/transport — no network, no real sleeping. Then the driver-side
+  * response parse: shape checks, JSON text kept as text.
   */
-class FredSourceSpec extends AnyFunSuite {
+class FredSourceSpec extends SparkSpec {
 
   private def http(replies: FredSource.HttpReply*): TestableHttp =
     new TestableHttp(replies.iterator)
@@ -73,5 +74,48 @@ class FredSourceSpec extends AnyFunSuite {
       h.fetchMonth("DGS10", jan, jan.plusMonths(1))
     }
     assert(e.getMessage.contains("500"))
+  }
+
+  // ------------------------------------------------ driver-side parse
+
+  private def values(json: String): Seq[(String, String)] =
+    FredSource.parse(json).map(r => (r.getString(0), r.getString(1)))
+
+  test("parse: a response without observations fails the shape check") {
+    val e = intercept[IllegalArgumentException] {
+      FredSource.parse("""{"error_code":400,"error_message":"Bad Request"}""")
+    }
+    assert(e.getMessage.contains("FRED response missing 'observations'"))
+    val e2 = intercept[IllegalArgumentException] {
+      FredSource.parse("""{"observations":[{"date":"2024-01-02"}]}""")
+    }
+    assert(e2.getMessage.contains("FRED observation missing date/value"))
+  }
+
+  test("parse: an empty observations list is an empty (date, value) frame; extract writes no leaf") {
+    val empty = FredSource.observations(spark, """{"observations":[]}""")
+    assert(empty.schema == Schemas.observation)
+    assert(empty.isEmpty)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-empty-month").toString
+    val pipe = new Pipeline(spark,
+      new FredSource.Fixture(Map(("DGS10", 2024, 1) -> """{"observations":[]}""")), tmp)
+    pipe.extract("DGS10", jan, LocalDate.parse("2024-01-31"))
+    assert(!new java.io.File(s"$tmp/raw_data/indicator=DGS10").exists())
+  }
+
+  test("parse: JSON null stays null, unquoted numbers keep their text, extra fields are skipped") {
+    val json =
+      """{"realtime_start":"2024-05-01","count":4,"observations":[
+        |{"realtime_start":"2024-05-01","realtime_end":"2024-05-01","date":"2024-01-02","value":null},
+        |{"date":"2024-01-03","value":4.10,"realtime_end":"2024-05-01"},
+        |{"date":"2024-01-04","value":"."},
+        |{"date":"2024-01-05","value":"oops","extra":{"nested":[1,2]}}],
+        |"units":"lin"}""".stripMargin.replace("\n", "")
+    assert(values(json) == Seq(
+      ("2024-01-02", null), ("2024-01-03", "4.10"),
+      ("2024-01-04", "."), ("2024-01-05", "oops")))
+    val frame = FredSource.observations(spark, json)
+    assert(frame.schema == Schemas.observation)
+    assert(frame.where("value is null").count() == 1L)
   }
 }

@@ -45,6 +45,51 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.parquet(s"$tmp/aggregated_data").count() == 2)
   }
 
+  test("extract: one bronze write per window, one data file per month leaf, idempotent") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-onewrite").toString
+    val fixture = new FredSource.Fixture(Map(
+      ("DGS10", 2024, 1) ->
+        """{"observations":[{"date":"2024-01-02","value":"3.95"},{"date":"2024-01-03","value":"."}]}""",
+      ("DGS10", 2024, 2) -> ("""{"observations":[{"date":"2024-02-01","value":"4.20"},""" +
+        """{"date":"2024-02-02","value":"oops"},{"date":"2024-02-05","value":"4.22"}]}"""),
+      ("DGS10", 2024, 3) ->
+        """{"observations":[{"date":"2024-03-01","value":"4.25"}]}"""))
+    // February straddles the middle of the window's rows, so a write
+    // split over several tasks would leave two files in its leaf
+    val pipe = new Pipeline(spark, fixture, tmp)
+    def leaves(): Map[String, Seq[String]] = {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(java.nio.file.Paths.get(pipe.bronzeRoot)).iterator().asScala
+        .filter(p => java.nio.file.Files.isRegularFile(p) &&
+          p.getFileName.toString.startsWith("part-"))
+        .toSeq.groupBy(_.getParent.toString.stripPrefix(pipe.bronzeRoot))
+        .map { case (dir, files) => dir -> files.map(_.getFileName.toString).sorted }
+    }
+    def bronzeRows(): Set[(String, String, String, String, String)] =
+      graft.fred.io.LakeIO.readBronze(spark, pipe.bronzeRoot)
+        .select("indicator", "observation_date", "observation_month",
+          "observation_year", "value")
+        .as[(String, String, String, String, String)].collect().toSet
+    val expected = Set(
+      ("DGS10", "2024-01-02", "1", "2024", "3.95"),
+      ("DGS10", "2024-01-03", "1", "2024", "."),
+      ("DGS10", "2024-02-01", "2", "2024", "4.20"),
+      ("DGS10", "2024-02-02", "2", "2024", "oops"),
+      ("DGS10", "2024-02-05", "2", "2024", "4.22"),
+      ("DGS10", "2024-03-01", "3", "2024", "4.25"))
+    pipe.extract("DGS10", LocalDate.parse("2024-01-01"), LocalDate.parse("2024-03-31"))
+    val first = leaves()
+    assert(first.keySet == (1 to 3).map(m =>
+      s"/indicator=DGS10/observation_year=2024/observation_month=$m").toSet)
+    assert(first.values.forall(_.size == 1), s"one data file per leaf: $first")
+    assert(bronzeRows() == expected)
+    // re-extracting the window overwrites each leaf in place
+    pipe.extract("DGS10", LocalDate.parse("2024-01-01"), LocalDate.parse("2024-03-31"))
+    val second = leaves()
+    assert(second.keySet == first.keySet && second.values.forall(_.size == 1))
+    assert(bronzeRows() == expected)
+  }
+
   test("layer retry: a transient extract failure heals; exhaustion propagates") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-retry").toString
     var calls = 0
@@ -165,6 +210,25 @@ class PipelineSpec extends SparkSpec {
     assert(n2 == 0L && b2 == 3L && a2 == 3L, s"second run no-op: $n2 $b2 $a2")
   }
 
+  test("LakeIO writes overwrite only their partitions and leave the session's overwrite mode alone") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val saved = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try {
+      val root = java.nio.file.Files.createTempDirectory("graft-dynamic").toString
+      val rows = Seq(("DGS10", 2024, 1, 1.0), ("DGS10", 2024, 2, 2.0))
+        .toDF("indicator", "observation_year", "observation_month", "value")
+      graft.fred.io.LakeIO.writeParquet(rows, root)
+      graft.fred.io.LakeIO.writeParquet(
+        Seq(("DGS10", 2024, 2, 20.0))
+          .toDF("indicator", "observation_year", "observation_month", "value"), root)
+      val got = spark.read.parquet(root)
+        .select("observation_month", "value").as[(Int, Double)].collect().toSet
+      assert(got == Set((1, 1.0), (2, 20.0)), s"January must survive: $got")
+      assert(spark.conf.get(key) == "static")
+    } finally spark.conf.set(key, saved)
+  }
+
   test("first-ever aggregate run: missing silver root yields empty gold, no throw") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-firstrun").toString
     val pipe = new Pipeline(spark, new FredSource.Fixture(Map.empty), tmp)
@@ -197,6 +261,26 @@ class PipelineSpec extends SparkSpec {
       graft.fred.io.SheetSink.syncAppend(withMarch,
         new graft.fred.io.SheetSink.InMemory(gold.schema), maxAppendRows = 2)
     }
+    // the guard counts rows AFTER dedup: 3 incoming, 1 new, limit 1
+    val withApril = withMarch.unionByName(
+      Seq(("DGS10", 2024, 4, 4.5)).toDF("indicator", "observation_year", "observation_month", "value"))
+    assert(graft.fred.io.SheetSink.syncAppend(withApril, sheet, maxAppendRows = 1) == 1L)
+    assert(sheet.size == 4)
+    // keys compare as the sheet types them: long keys match int keys
+    val longKeys = Seq(("DGS10", 2024L, 1L, 4.0), ("DGS10", 2024L, 6L, 4.7))
+      .toDF("indicator", "observation_year", "observation_month", "value")
+    assert(graft.fred.io.SheetSink.syncAppend(longKeys, sheet) == 1L)
+    assert(sheet.size == 5)
+    assert(sheet.read(spark).where("observation_month = 6").count() == 1L)
+    // left_anti semantics: a null key never matches, not even the same
+    // null-keyed row already on the sheet, so every sync appends it
+    val nullable = new graft.fred.io.SheetSink.InMemory(
+      org.apache.spark.sql.types.StructType(gold.schema.map(_.copy(nullable = true))))
+    val nullKey = Seq(("DGS10", Option.empty[Int], 5, 4.6))
+      .toDF("indicator", "observation_year", "observation_month", "value")
+    assert(graft.fred.io.SheetSink.syncAppend(nullKey, nullable) == 1L)
+    assert(graft.fred.io.SheetSink.syncAppend(nullKey, nullable) == 1L)
+    assert(nullable.size == 2)
   }
 
   test("DdlOps: create/rename/add/truncate against the session catalog") {
