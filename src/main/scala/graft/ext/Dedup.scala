@@ -1494,8 +1494,7 @@ object Dedup {
     * scan, keep the affected files' surviving rows, re-append, drop
     * the old files last. `outsideAnti` selects the convergence
     * discipline: true = one-row-per-key tables (anti-join kept rows
-    * against copies outside the affected files — the
-    * [[SuffixDedup.deleteKeysFromSavedIndex]] argument); false =
+    * against copies outside the affected files); false =
     * many-rows-per-key tables (DISTINCT over the affected files —
     * valid because every transient copy shares the key and is
     * therefore tagged). */
@@ -1503,6 +1502,10 @@ object Dedup {
       tableRoot: String, tbl: String, table: DataFrame,
       hitKeys: DataFrame, keyCol: String, outsideAnti: Boolean,
       cols: Seq[String], dropDocs: Option[DataFrame] = None): Unit = {
+    // tag files BEFORE the join: input_file_name() evaluated above
+    // a sort-merge semi join reads whatever file the task's sorter
+    // drained LAST, not the row's source — the column must
+    // materialize in a project directly over the scan
     val tagged = table.withColumn("__f", input_file_name())
     val affected = tagged
       .join(hitKeys.withColumnRenamed("g", keyCol), Seq(keyCol), "left_semi")
@@ -1517,18 +1520,30 @@ object Dedup {
         hitKeys.withColumnRenamed("g", keyCol), Seq(keyCol), "left_anti")
     }
     val surviving =
+      // one row per key: MINUS rows already present outside the
+      // affected files. In a healthy table every key exists once, so
+      // this drops nothing — but after a crash between a prior run's
+      // append and its file deletions it is what makes the re-run
+      // converge to single copies instead of compounding duplicates
       if (outsideAnti)
         surviving0.join(
           tagged.filter(!col("__f").isInCollection(affected.toSeq))
             .select(keyCol), Seq(keyCol), "left_anti")
           .select(cols.map(col): _*)
       else surviving0.select(cols.map(col): _*).distinct()
+    // stage through a sibling temp dir: inserting rows read from
+    // the table being inserted into is self-referential
     val tmp = SketchState.sibling(tableRoot, ".erase_tmp")
     val fs = tmp.getFileSystem(spark.sessionState.newHadoopConf())
     fs.delete(tmp, true)
     surviving.write.parquet(tmp.toString)
     spark.read.parquet(tmp.toString)
       .write.mode("append").insertInto(tbl)
+    // drop the cached file listing BEFORE the deletes as well: a
+    // same-session reader planning a scan between a delete and the
+    // final refresh would otherwise hold a listing naming files
+    // about to vanish. This narrows the window; it cannot close it
+    // for CONCURRENT readers, who quiesce for the erase.
     spark.catalog.refreshTable(tbl)
     affected.foreach { f =>
       fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(f)), false)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.fred.io.LakeIO
 import graft.functions.VectorMath.cosineF
 
 /** IVF (inverted-file) approximate-nearest-neighbor index: k-means
@@ -86,10 +87,10 @@ object Ivf {
     * search time — the point of the partitioned layout). */
   def load(spark: SparkSession, root: String): Index = {
     import spark.implicits._
-    healSavedIvf(spark, root) // finish a crashed erase commit first:
-    // a crash mid-commit can leave a partition whose only copy of its
-    // survivors is the staged erase dir — reading without the heal
-    // would return a silently truncated index
+    // finish a crashed erase or compaction first: a crash mid-commit can
+    // leave a cluster whose only copy is the commit's stage — reading
+    // without the heal would return a silently truncated index
+    LakeIO.healReplaceLeaves(spark, s"$root/assigned")
     val centroids = spark.read.parquet(s"$root/centroids")
       .select("cluster", "centroid").as[(Int, Seq[Float])]
       .collect().sortBy(_._1).map(_._2.toArray)
@@ -144,9 +145,11 @@ object Ivf {
     * `assigned/` layout — one file per touched cluster partition per
     * batch, so search keeps pruning to probed partitions and the
     * small-file accumulation is exactly what
-    * `LakeIO.compactFragmented` exists to mop up periodically. The
-    * reader contract is unchanged: [[load]] returns the appended
-    * index.
+    * [[LakeIO.compactFragmented]] exists to mop up periodically. It
+    * rewrites clusters through the same staged leaf-replace commit as
+    * [[deleteFromSaved]], so this method and [[load]] heal a crashed
+    * compaction before touching the layout. The reader contract is
+    * unchanged: [[load]] returns the appended index.
     *
     * The batch's id/vector columns are CAST to the saved layout's
     * types before the append (r12 ADVICE #3): a batch arriving as
@@ -157,7 +160,7 @@ object Ivf {
     * appended index would no longer equal the build-time one. */
   def appendToSaved(spark: SparkSession, root: String, batch: DataFrame,
       idCol: String, vecCol: String): Unit = {
-    healSavedIvf(spark, root) // see load
+    LakeIO.healReplaceLeaves(spark, s"$root/assigned") // see load
     val saved = spark.read.parquet(s"$root/assigned").schema
     assignBatch(load(spark, root).centroids, batch, idCol, vecCol)
       .select(
@@ -176,32 +179,20 @@ object Ivf {
     *
     * Id-only by design: one column-pruned membership scan
     * ((neighbor_id, cluster) — the vectors never read) finds the
-    * affected clusters, then ONLY those cluster partitions rewrite
-    * via per-write dynamic partition overwrite; untouched clusters'
-    * files are not opened. Clusters whose every row is deleted get
-    * their partition directories dropped explicitly (dynamic
-    * overwrite only replaces partitions present in the written data
-    * — an emptied cluster would otherwise silently keep its old
-    * files, the exact silent-residue failure erasure exists to
-    * prevent).
+    * affected clusters, then ONLY those cluster partitions are
+    * replaced, by [[LakeIO.replaceLeaves]]; untouched clusters' files
+    * are not opened. A cluster whose every row is deleted stages no
+    * rows and its partition directory is dropped.
     *
-    * Crash-convergent by a staged-commit protocol (r17 ADVICE #2
-    * closed the commit window the previous form carried): survivors
-    * stage OUTSIDE the source dir first, then an `_AFFECTED` marker
-    * (the atomically-published cluster list) stamps the stage
-    * COMPLETE — that stamp is the commit point. Only after it does
-    * the dynamic partition overwrite touch the live layout. Spark's
-    * dynamic overwrite commits per partition by delete-then-rename,
-    * so a crash inside it CAN leave a partition whose only survivor
-    * copy is the staged dir — which is exactly why the stage is kept
-    * until the commit fully lands, and why [[healSavedIvf]] (wired
-    * into [[load]], [[appendToSaved]], and the top of this method)
-    * re-runs the commit FROM THE STAGE on the next touch instead of
-    * recomputing from the possibly-truncated layout. An unstamped
-    * stage means the live layout was never touched: the heal discards
-    * it and the erase re-delivers. Every commit step re-runs
-    * idempotently (same staged rows overwrite the same partitions;
-    * empty-partition drops are no-ops on re-run).
+    * Crash-convergent through that commit: survivors stage OUTSIDE
+    * the `assigned/` dir, a manifest of the affected clusters is the
+    * commit point, and only then are the live partitions replaced, by
+    * copying from the stage, which stays complete until the commit
+    * lands. [[load]], [[appendToSaved]] and the top of this method run
+    * the heal: past the commit point it finishes the erase from the
+    * stage (never from the live layout, which a crash may have left
+    * missing a cluster); before it, it drops the stage with the live
+    * layout untouched, and the erase re-delivers.
     *
     * Readers should quiesce for the erase, as for every saved-state
     * erasure in this library. Corner: erasing EVERY
@@ -210,8 +201,8 @@ object Ivf {
     * instead of probing an emptied index. */
   def deleteFromSaved(spark: SparkSession, root: String,
       ids: DataFrame, idCol: String): Unit = {
-    healSavedIvf(spark, root) // finish/discard any crashed prior erase
     val assignedPath = s"$root/assigned"
+    LakeIO.healReplaceLeaves(spark, assignedPath) // see load
     val assigned = spark.read.parquet(assignedPath)
     val del = ids
       .select(col(idCol).cast(assigned.schema("neighbor_id").dataType)
@@ -222,82 +213,10 @@ object Ivf {
       .select(col("cluster").cast("int")).distinct()
       .collect().map(_.getInt(0)) // bounded by the cluster count
     if (affected.isEmpty) return
-    val tmp = SketchState.sibling(assignedPath, ".erase_tmp")
-    val fs = tmp.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.delete(tmp, true)
-    // stage survivors of the affected clusters OUTSIDE the source dir
-    // (Spark refuses an overwrite of a path it is reading)
-    assigned.filter(col("cluster").isInCollection(affected.toSeq))
-      .join(del, Seq("neighbor_id"), "left_anti")
-      .write.parquet(tmp.toString)
-    // COMMIT POINT: the affected-cluster list publishes atomically
-    // (dot-temp + rename) into the stage — from here the heal can
-    // always finish the commit from the staged copy alone
-    SuffixDedup.writeMarkerAtomic(fs, tmp, AffectedMarker,
-      affected.sorted.mkString(","))
-    commitStagedErase(spark, root, affected.toSeq)
-  }
-
-  /** Stage-stamp file inside a [[deleteFromSaved]] erase stage: the
-    * affected cluster ids, published atomically. Presence = the stage
-    * is complete and the commit may have started. */
-  private val AffectedMarker = "_AFFECTED"
-
-  /** The committed half of [[deleteFromSaved]]: replace the affected
-    * clusters' partitions from the staged survivors, drop emptied
-    * partitions, discard the stage LAST — marker file FIRST, then the
-    * staged data. Every step re-runs safely.
-    *
-    * The marker-first delete order is load-bearing: a directory
-    * delete is not atomic, so dropping the stage dir with `_AFFECTED`
-    * still inside it leaves a crash window where the marker survives
-    * but some staged survivor files are already gone — the next heal
-    * would re-run the commit FROM THE PARTIAL STAGE, read the lost
-    * clusters as emptied, and drop their live partitions (silent
-    * survivor loss). Deleting the single marker file first (effectively
-    * atomic) inverts the failure: a crash mid-dir-delete leaves a
-    * marker-LESS partial stage, which [[healSavedIvf]] discards — the
-    * commit it stamped has already fully landed. */
-  private def commitStagedErase(spark: SparkSession, root: String,
-      affected: Seq[Int]): Unit = {
-    val assignedPath = s"$root/assigned"
-    val tmp = SketchState.sibling(assignedPath, ".erase_tmp")
-    val fs = tmp.getFileSystem(spark.sessionState.newHadoopConf())
-    val staged = spark.read.parquet(tmp.toString)
-    val nonEmpty = staged.select(col("cluster").cast("int")).distinct()
-      .collect().map(_.getInt(0)).toSet
-    if (nonEmpty.nonEmpty)
-      staged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cluster").parquet(assignedPath)
-    affected.filterNot(nonEmpty).foreach { c =>
-      fs.delete(new org.apache.hadoop.fs.Path(assignedPath, s"cluster=$c"),
-        true)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(tmp, AffectedMarker), false)
-    fs.delete(tmp, true)
-  }
-
-  /** Heal a crashed [[deleteFromSaved]], wired into every reader and
-    * writer of a saved index: a STAMPED stage re-runs its commit from
-    * the staged survivors (never from the live layout, which a crash
-    * mid-overwrite may have truncated — the staged dir holds the only
-    * copy of that partition's survivors until the commit lands); an
-    * unstamped stage is discarded with the live layout untouched (the
-    * erase never committed anything — re-deliver it). */
-  def healSavedIvf(spark: SparkSession, root: String): Unit = {
-    val tmp = SketchState.sibling(s"$root/assigned", ".erase_tmp")
-    val fs = tmp.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(tmp)) return
-    val marker = new org.apache.hadoop.fs.Path(tmp, AffectedMarker)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val txt = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .mkString.trim finally in.close()
-      val affected =
-        if (txt.isEmpty) Seq.empty[Int] else txt.split(",").toSeq.map(_.toInt)
-      commitStagedErase(spark, root, affected)
-    } else fs.delete(tmp, true)
+    LakeIO.replaceLeaves(spark, assignedPath, Seq("cluster"),
+      affected.toSeq.map(c => LakeIO.leafPath(Seq("cluster"), Seq(c.toString))),
+      assigned.filter(col("cluster").isInCollection(affected.toSeq))
+        .join(del, Seq("neighbor_id"), "left_anti").write)
   }
 
   /** Top-k search probing each query's `nprobe` nearest clusters.

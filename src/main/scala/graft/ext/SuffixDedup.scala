@@ -1143,52 +1143,11 @@ object SuffixDedup {
         Seq("g"), "left_anti")
       case None => toDrop0
     }
-    if (buckets > 0) {
-      val tbl = gramIndexTableName(root)
-      val idx = savedGramIndexBucketed(spark, root, buckets)
-      // tag files BEFORE the join: input_file_name() evaluated above
-      // a sort-merge semi join reads whatever file the task's sorter
-      // drained LAST, not the row's source — the column must
-      // materialize in a project directly over the scan
-      val tagged = idx.withColumn("__f", input_file_name())
-      val affected = tagged.join(toDrop, Seq("g"), "left_semi")
-        .select("__f").distinct()
-        .collect().map(_.getString(0)) // bounded by the bucket count
-      if (affected.isEmpty) return
-      // kept = affected files' surviving rows, MINUS rows already
-      // present outside the affected files: in a healthy index every
-      // key exists once (the anti-join append), so this second
-      // anti-join drops nothing — but after a crash between a prior
-      // run's append and its file deletions, it is exactly what makes
-      // the re-run converge to single copies instead of compounding
-      // duplicates per crash
-      val kept = tagged
-        .filter(col("__f").isInCollection(affected.toSeq))
-        .join(toDrop, Seq("g"), "left_anti")
-        .join(tagged.filter(!col("__f").isInCollection(affected.toSeq))
-          .select("g"), Seq("g"), "left_anti")
-        .select("g", "first_batch_id")
-      // stage through a sibling temp dir: inserting rows read from
-      // the table being inserted into is self-referential
-      val tmp = SketchState.sibling(root, ".erase_tmp")
-      val fs = tmp.getFileSystem(spark.sessionState.newHadoopConf())
-      fs.delete(tmp, true)
-      kept.write.parquet(tmp.toString)
-      spark.read.parquet(tmp.toString)
-        .write.mode("append").insertInto(tbl)
-      // drop the cached file listing BEFORE the deletes as well: a
-      // same-session reader planning a scan between a delete and the
-      // final refresh would otherwise hold a listing naming files
-      // about to vanish (r16 ADVICE #3). This narrows the window; it
-      // cannot close it for CONCURRENT readers — see the quiescence
-      // note in the method scaladoc.
-      spark.catalog.refreshTable(tbl)
-      affected.foreach { f =>
-        fs.delete(new org.apache.hadoop.fs.Path(new java.net.URI(f)), false)
-      }
-      fs.delete(tmp, true)
-      spark.catalog.refreshTable(tbl)
-    } else {
+    if (buckets > 0)
+      Dedup.eraseBucketRows(spark, root, gramIndexTableName(root),
+        savedGramIndexBucketed(spark, root, buckets), hitKeys = toDrop,
+        keyCol = "g", outsideAnti = true, cols = Seq("g", "first_batch_id"))
+    else {
       recoverSavedIndex(spark, root) // a crashed prior erasure must
       // restore BEFORE the existence check — returning on a missing
       // root while .swap_old holds the pre-delete state would report

@@ -137,10 +137,8 @@ class Pipeline(spark: SparkSession, source: FredSource, lakeRoot: String,
       // directories (space, ':', '%', …) — a leaf built from the raw
       // value would miss those directories and the delete would
       // silently remove nothing while reporting success, a failed
-      // right-to-erasure (r15 ADVICE #1). Build the leaf with the
-      // same escaping the writer used.
-      def esc(v: String): String = org.apache.spark.sql.catalyst.catalog
-        .ExternalCatalogUtils.escapePathName(v)
+      // right-to-erasure. Build the leaf with the same escaping the
+      // writer used.
       def drop(root: String, leaf: String): Unit = {
         val p = new org.apache.hadoop.fs.Path(s"$root/$leaf")
         val fs = p.getFileSystem(conf)
@@ -152,8 +150,8 @@ class Pipeline(spark: SparkSession, source: FredSource, lakeRoot: String,
         else if (!fs.delete(p, true))
           sys.error(s"could not delete partition leaf $p")
       }
-      val monthLeaf = s"indicator=${esc(seriesId)}/observation_year=$year" +
-        s"/observation_month=$month"
+      val monthLeaf = LakeIO.leafPath(LakeIO.PartitionCols,
+        Seq(seriesId, year.toString, month.toString))
       drop(bronzeRoot, monthLeaf)
       drop(silverRoot, monthLeaf)
       val silverYear = LakeIO
@@ -161,7 +159,8 @@ class Pipeline(spark: SparkSession, source: FredSource, lakeRoot: String,
         .where(col("indicator") === seriesId &&
           col("observation_year") === year)
       if (silverYear.isEmpty)
-        drop(goldRoot, s"indicator=${esc(seriesId)}/observation_year=$year")
+        drop(goldRoot, LakeIO.leafPath(Seq("indicator", "observation_year"),
+          Seq(seriesId, year.toString)))
       else
         LakeIO.writeParquet(YearlyGold.toGold(silverYear), goldRoot,
           Seq("indicator", "observation_year"))

@@ -1,7 +1,10 @@
 package graft.fred.io
 
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.types.{StringType, StructType}
 
 /** Partitioned-lake read/write (G2, G3, H1, H2).
   *
@@ -183,19 +186,25 @@ object LakeIO {
   }
 
   /** Leaf partition directories under `root` (dirs directly holding
-    * ≥1 data file), with their data-file counts. */
+    * ≥1 data file), with their data-file counts. Skips the directories
+    * Spark's file index skips: dot-names, and `_`-names that are not a
+    * `col=value` leaf — a crashed write's `_temporary/` attempt files
+    * are not part of the table and are not counted or compacted. */
   def partitionCensus(spark: SparkSession,
       root: String): Seq[(String, Long)] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
+    val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-    def walk(dir: org.apache.hadoop.fs.Path): Unit = {
+    def walk(dir: Path): Unit = {
       val entries = fs.listStatus(dir)
       val n = entries.count(e =>
         e.isFile && e.getPath.getName.endsWith(".parquet"))
       if (n > 0) out += ((dir.toString, n.toLong))
       entries.filter(_.isDirectory)
-        .filterNot(_.getPath.getName.startsWith("."))
+        .filterNot { e =>
+          val name = e.getPath.getName
+          name.startsWith(".") || (name.startsWith("_") && !name.contains("="))
+        }
         .foreach(e => walk(e.getPath))
     }
     walk(rootPath)
@@ -207,19 +216,17 @@ object LakeIO {
     * [[compactParquet]] a large lake actually schedules (rewriting
     * 100 TB to fix last week's fragmented partitions is absurd; the
     * maintenance job touches the hot tail only). Fragmented leaves
-    * are read with `basePath` (partition columns preserved), written
-    * compacted to a dot-prefixed temp dir under `root` (invisible to
-    * readers — Spark skips dot-dirs), then SWAPPED in via one
-    * FS rename per partition (atomic per partition on HDFS/POSIX;
-    * the old leaf is renamed aside first and deleted after, so a
-    * crash mid-swap strands at most a `.compact_old` aside — never a
-    * half-written visible partition — and [[healPartitionSwaps]],
-    * wired into the top of this op and [[deleteWhere]], restores a
-    * leaf whose only copy is its aside and purges stale asides whose
-    * swap landed). Untouched partitions keep their exact files.
-    * Global atomicity across partitions is a table format's job
-    * (Iceberg/Delta `rewrite_data_files` = this + a catalog
-    * transaction) — caveat stated, like [[compactParquet]].
+    * are read with `basePath` (partition columns preserved), rewritten
+    * with ONE shuffle on the partition columns and `maxRecordsPerFile`
+    * sized from their own bytes-per-row, and swapped in by
+    * [[replaceLeaves]], the staged leaf-replace commit every in-place
+    * leaf rewrite here shares: a crash at any step leaves the
+    * fragmented or the compacted leaf once [[healReplaceLeaves]] has
+    * run, and it runs at the top of this op and of [[deleteWhere]].
+    * Untouched partitions keep their exact files. Global atomicity
+    * across partitions is a table format's job (Iceberg/Delta
+    * `rewrite_data_files` = this + a catalog transaction) — caveat
+    * stated, like [[compactParquet]].
     *
     * Returns (partitions_compacted, files_before, files_after) over
     * the whole root. */
@@ -228,43 +235,33 @@ object LakeIO {
       partitionCols: Seq[String] = PartitionCols): (Long, Long, Long) = {
     require(targetBytes > 0, "targetBytes must be positive")
     require(minFiles >= 1, "minFiles must be >= 1")
-    healPartitionSwaps(spark, root) // finish a crashed prior swap first
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
+    healReplaceLeaves(spark, root) // finish a crashed prior commit first
     val leaves = partitionCensus(spark, root)
     val filesBefore = leaves.map(_._2).sum
     val frag = leaves.filter(_._2 > minFiles)
     if (frag.isEmpty) return (0L, filesBefore, filesBefore)
-    val tmp = new org.apache.hadoop.fs.Path(rootPath, ".compact_tmp")
-    fs.delete(tmp, true)
+    val paths = frag.map(_._1)
+    // partition values read back verbatim, as strings: a type inferred
+    // from these leaves alone can rename a leaf (`007` → 7) or be VOID
+    // (an all-null leaf), which no writer takes
+    val inferred = spark.read.option("basePath", root).parquet(paths: _*).schema
     val df = spark.read.option("basePath", root)
-      .parquet(frag.map(_._1): _*)
+      .schema(StructType(inferred.map(f =>
+        if (partitionCols.contains(f.name)) f.copy(dataType = StringType) else f)))
+      .parquet(paths: _*)
     val rows = df.count()
     val fragBytes = frag.map { case (dir, _) =>
       parquetCensus(spark, dir)._2 }.sum
     val avgRow = math.max(1L, fragBytes / math.max(rows, 1L))
-    df.repartition(partitionCols.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .option("maxRecordsPerFile", math.max(1L, targetBytes / avgRow))
-      .partitionBy(partitionCols: _*)
-      .parquet(tmp.toString)
-    val qRoot = fs.makeQualified(rootPath).toString
-    frag.foreach { case (dir, _) =>
-      val leaf = fs.makeQualified(new org.apache.hadoop.fs.Path(dir))
-      val rel = leaf.toString.stripPrefix(qRoot).stripPrefix("/")
-      require(rel.nonEmpty && rel != leaf.toString,
-        s"partition $leaf is not under $qRoot")
-      val tmpLeaf = new org.apache.hadoop.fs.Path(tmp, rel)
-      require(fs.exists(tmpLeaf),
-        s"compacted output missing for partition $rel — aborting swap")
-      val aside = new org.apache.hadoop.fs.Path(
-        leaf.getParent, s".compact_old_${leaf.getName}")
-      fs.delete(aside, true)
-      require(fs.rename(leaf, aside), s"could not move aside $leaf")
-      require(fs.rename(tmpLeaf, leaf), s"could not swap in $tmpLeaf")
-      fs.delete(aside, true)
+    val qRoot = leafStage(spark, root)._2.toString
+    val rels = frag.map { case (dir, _) =>
+      val rel = dir.stripPrefix(qRoot).stripPrefix("/")
+      require(rel.nonEmpty && rel != dir, s"partition $dir is not under $qRoot")
+      rel
     }
-    fs.delete(tmp, true)
+    replaceLeaves(spark, root, partitionCols, rels,
+      df.repartition(partitionCols.map(col): _*).write
+        .option("maxRecordsPerFile", math.max(1L, targetBytes / avgRow)))
     (frag.size.toLong, filesBefore, partitionCensus(spark, root).map(_._2).sum)
   }
 
@@ -281,138 +278,147 @@ object LakeIO {
     * Mechanics: one predicate scan finds the affected partition
     * tuples (parquet min/max stats prune files the predicate cannot
     * match even inside unpruned partitions); only those leaves are
-    * re-read, anti-filtered, written to a dot-prefixed temp dir
-    * (invisible to readers) and SWAPPED in per partition with the
-    * [[compactFragmented]] rename discipline — a partition whose rows
-    * ALL matched comes back empty and its leaf is removed outright.
-    * Non-affected partitions are never read past the probe scan.
+    * re-read, anti-filtered and swapped in by [[replaceLeaves]] — a
+    * partition whose rows ALL matched stages no rows and its leaf is
+    * removed outright. Non-affected partitions are never read past
+    * the probe scan. After a crash, [[healReplaceLeaves]] (run at the
+    * top of this op) finishes the delete once its commit point has
+    * passed and leaves the lake untouched before it; re-delivering
+    * the same delete converges either way.
     *
     * @return (partitions_rewritten, rows_deleted) */
   def deleteWhere(spark: SparkSession, root: String,
       predicate: org.apache.spark.sql.Column,
       partitionCols: Seq[String] = PartitionCols): (Long, Long) = {
-    healPartitionSwaps(spark, root) // finish a crashed prior swap first
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val probe = spark.read.parquet(root).filter(predicate)
-      .groupBy(partitionCols.map(org.apache.spark.sql.functions.col): _*)
+    healReplaceLeaves(spark, root) // finish a crashed prior commit first
+    val lake = spark.read.parquet(root)
+    // partition values rendered as Spark's writer renders them when it
+    // names a leaf directory: cast to string
+    val probe = lake.filter(predicate)
+      .groupBy(partitionCols.map(c => col(c).cast("string")): _*)
       .count()
       .collect() // bounded by the partition count, not the row count
     if (probe.isEmpty) return (0L, 0L)
     val rowsDeleted = probe.map(_.getLong(partitionCols.size)).sum
-    val qRoot = fs.makeQualified(rootPath).toString
-    // hive layout: root/col1=v1/col2=v2 — values here are the
-    // identifier/int partition keys this lake writes; callers with
-    // special-character partition values need hive escaping (stated)
-    val leaves = probe.map { r =>
-      partitionCols.zipWithIndex
-        .map { case (c, i) => s"$c=${r.get(i)}" }.mkString("/")
-    }
-    val tmp = new org.apache.hadoop.fs.Path(rootPath, ".delete_tmp")
-    fs.delete(tmp, true)
+    val leaves = probe.toSeq.map(r =>
+      leafPath(partitionCols, partitionCols.indices.map(r.getString)))
+    val qRoot = leafStage(spark, root)._2.toString
     // NOT coalesce(p, false), not plain !p: a NULL-valued predicate
     // row is NOT a match (the probe's filter(p) semantics) and must
     // SURVIVE the rewrite — `!p` on NULL is NULL and would silently
-    // drop it
-    val kept = spark.read.option("basePath", root)
-      .parquet(leaves.map(l => s"$qRoot/$l").toIndexedSeq: _*)
-      .filter(!org.apache.spark.sql.functions.coalesce(predicate,
-        org.apache.spark.sql.functions.lit(false)))
-    kept.repartition(partitionCols.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy(partitionCols: _*)
-      .parquet(tmp.toString)
-    // The swap loop is per-leaf atomic but NOT transactional across
-    // leaves: a failure mid-loop leaves earlier leaves rewritten and
-    // later ones untouched (each leaf is individually consistent —
-    // re-running the same deleteWhere converges). Within one leaf, a
-    // failed swap-in restores the original partition before rethrowing
-    // so readers never see the partition missing (r14 ADVICE #3).
-    leaves.foreach { rel =>
-      val leaf = new org.apache.hadoop.fs.Path(s"$qRoot/$rel")
-      val tmpLeaf = new org.apache.hadoop.fs.Path(tmp, rel)
-      val aside = new org.apache.hadoop.fs.Path(
-        leaf.getParent, s".delete_old_${leaf.getName}")
-      fs.delete(aside, true)
-      require(fs.rename(leaf, aside), s"could not move aside $leaf")
-      // a fully-deleted partition has no compacted output: drop it
-      if (fs.exists(tmpLeaf) && !fs.rename(tmpLeaf, leaf)) {
-        // put the original leaf back before failing — the aside dir is
-        // dot-prefixed (invisible), so leaving it there would present
-        // readers a silently-missing partition
-        fs.rename(aside, leaf)
-        throw new IllegalStateException(
-          s"could not swap in $tmpLeaf; original $leaf restored")
-      }
-      fs.delete(aside, true)
-    }
-    fs.delete(tmp, true)
+    // drop it. The leaves re-read with the lake's schema: partition
+    // types inferred from these leaves alone can differ (an all-null
+    // leaf infers VOID, which no writer takes)
+    val kept = spark.read.schema(lake.schema).option("basePath", root)
+      .parquet(leaves.map(l => s"$qRoot/$l"): _*)
+      .filter(!coalesce(predicate, lit(false)))
+    replaceLeaves(spark, root, partitionCols, leaves,
+      kept.repartition(partitionCols.map(col): _*).write)
     (leaves.length.toLong, rowsDeleted)
   }
 
-  /** Heal the per-partition swap asides a crashed [[compactFragmented]]
-    * or [[deleteWhere]] leaves behind — wired into the top of both ops
-    * (the maintenance-cadence choke point; plain lake roots have no
-    * reader funnel to intercept, so run this after a crash before
-    * trusting reads). Walks the partition tree for
-    * `.compact_old_*` / `.delete_old_*` siblings:
+  /** Hive leaf path `c1=v1/c2=v2` of one partition tuple, escaped as
+    * Spark's writer escapes it: `:`, `%`, `/` and the like become
+    * `%XX`, and a null value is `__HIVE_DEFAULT_PARTITION__`. A leaf
+    * built from the raw value misses such a directory. */
+  private[graft] def leafPath(partitionCols: Seq[String],
+      values: Seq[String]): String =
+    partitionCols.zip(values).map { case (c, v) =>
+      ExternalCatalogUtils.getPartitionPathString(c, v)
+    }.mkString("/")
+
+  /** The staged leaf-replace commit: replace the `leaves` of the
+    * Hive-partitioned `root` (paths relative to it, as [[leafPath]]
+    * builds them) with the rows `replacement` writes. The caller sizes
+    * the files (repartition, `maxRecordsPerFile`); this owns where
+    * they go and when they become live:
     *
-    *   - visible leaf MISSING → rename the aside back. The crash hit
-    *     between the two renames and the aside holds the partition's
-    *     ONLY copy — without the restore every read silently misses
-    *     that partition (the dot-prefix hides the aside from Spark).
-    *   - visible leaf PRESENT → delete the stale aside. The swap
-    *     landed; for [[deleteWhere]] the aside is the deleted rows'
-    *     LAST on-disk copy, and right-to-be-forgotten must not leave
-    *     it lingering in a hidden sibling.
+    *   1. Stage: `replacement` is written, partitioned by
+    *      `partitionCols`, to a dot-sibling of `root` — outside it,
+    *      since Spark refuses to overwrite a path it is reading.
+    *      Staged rows outside the listed leaves abort the commit here
+    *      (a re-read that renders a value differently from its
+    *      directory, such as `007` inferred as `7`, must not turn a
+    *      replace into a delete).
+    *   2. Commit point: a manifest listing the leaves is published into
+    *      the stage by one rename. Before it the live root is
+    *      untouched; from it on the stage alone can finish the commit.
+    *   3. Apply: per leaf, delete the live leaf, then copy in its staged
+    *      files, if it has any — a leaf with no staged rows stays
+    *      deleted. Nothing is renamed out of the stage (on an object
+    *      store a directory rename is itself a copy then a delete), so
+    *      the stage stays complete until the commit has landed.
+    *   4. Discard: the manifest first, then the stage. A directory
+    *      delete is not atomic, and a crash inside it must leave a
+    *      manifest-less stage, which [[healReplaceLeaves]] drops — a
+    *      stamped partial stage would apply its missing leaves as
+    *      deletions.
     *
-    * One state is ambiguous: a FULLY-deleted partition's crash between
-    * its move-aside and its aside-drop looks identical to a crashed
-    * swap-in (leaf missing, aside present). The heal RESTORES — the
-    * convergent choice: re-delivering the same `deleteWhere`
-    * re-deletes it (predicate semantics, idempotent), whereas guessing
-    * "drop" in the other case would destroy a compacted partition's
-    * survivors outright. Erasure callers therefore re-deliver after a
-    * crash, the standing contract for every erasure path in this
-    * library.
-    *
-    * @return (leaves_restored, stale_asides_purged) */
-  def healPartitionSwaps(spark: SparkSession, root: String): (Long, Long) = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(rootPath)) return (0L, 0L)
-    var restored = 0L
-    var purged = 0L
-    val aside = "^\\.(?:compact_old_|delete_old_)(.+)$".r
-    def walk(dir: org.apache.hadoop.fs.Path): Unit =
-      fs.listStatus(dir).filter(_.isDirectory).foreach { e =>
-        e.getPath.getName match {
-          case aside(orig) =>
-            val leaf = new org.apache.hadoop.fs.Path(dir, orig)
-            if (!fs.exists(leaf)) {
-              require(fs.rename(e.getPath, leaf),
-                s"could not restore $leaf from ${e.getPath}")
-              // name WHICH partitions came back (r19 ADVICE #5): for a
-              // crashed fully-deleted partition the restore quietly
-              // resurrects erased rows until the caller re-delivers
-              // the delete (the documented convergent choice) — an
-              // erasure operator watching this log can re-deliver
-              // promptly instead of discovering the rows in an audit
-              System.err.println(
-                s"[graft] healPartitionSwaps: restored $leaf from a " +
-                  "crashed swap aside — if this partition was being " +
-                  "DELETED, re-deliver the deleteWhere")
-              restored += 1
-            } else {
-              fs.delete(e.getPath, true)
-              purged += 1
-            }
-          case n if !n.startsWith(".") && !n.startsWith("_") =>
-            walk(e.getPath)
-          case _ => ()
-        }
-      }
-    walk(rootPath)
-    (restored, purged)
+    * Every step re-runs idempotently. Once [[healReplaceLeaves]] has
+    * run, readers see each leaf's old rows or its new rows; a reader
+    * racing the apply can see a leaf missing, so readers quiesce for
+    * the commit. */
+  private[graft] def replaceLeaves(spark: SparkSession, root: String,
+      partitionCols: Seq[String], leaves: Seq[String],
+      replacement: DataFrameWriter[Row]): Unit = {
+    val (fs, rootPath, stage) = leafStage(spark, root)
+    replacement.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
+      .parquet(stage.toString)
+    val stray = partitionCensus(spark, stage.toString)
+      .map(_._1.stripPrefix(stage.toString).stripPrefix("/"))
+      .filterNot(leaves.toSet)
+    require(stray.isEmpty, s"staged rows fall outside the leaves being " +
+      s"replaced under $root: ${stray.mkString(", ")} — nothing committed")
+    val tmp = new Path(stage, s".$LeafManifest.tmp")
+    val out = fs.create(tmp, true)
+    try out.write(leaves.mkString("\n").getBytes("UTF-8")) finally out.close()
+    require(fs.rename(tmp, new Path(stage, LeafManifest)),
+      s"could not publish the manifest in $stage")
+    applyStage(spark, fs, rootPath, stage, leaves)
+  }
+
+  /** Finish or drop a crashed [[replaceLeaves]] on `root`: a stage
+    * holding a manifest re-runs apply and discard from the stage; a
+    * stage without one is dropped, since the live root was never
+    * touched. Runs at the top of every op that rewrites leaves and in
+    * every funnelled reader of such a root; a plain lake root has no
+    * reader funnel, so run it after a crash before trusting reads. */
+  def healReplaceLeaves(spark: SparkSession, root: String): Unit = {
+    val (fs, rootPath, stage) = leafStage(spark, root)
+    val manifest = new Path(stage, LeafManifest)
+    if (fs.exists(manifest)) {
+      val in = fs.open(manifest)
+      val leaves = try scala.io.Source.fromInputStream(in, "UTF-8")
+        .getLines().filter(_.nonEmpty).toList finally in.close()
+      applyStage(spark, fs, rootPath, stage, leaves)
+    } else if (fs.exists(stage)) fs.delete(stage, true)
+  }
+
+  private val LeafManifest = "_LEAVES"
+
+  /** (filesystem, qualified root, stage dir) of a leaf-replaced root. */
+  private def leafStage(spark: SparkSession,
+      root: String): (FileSystem, Path, Path) = {
+    val p = new Path(root)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val q = fs.makeQualified(p)
+    (fs, q, new Path(q.getParent, s".${q.getName}.leaf_commit"))
+  }
+
+  /** Steps 3 and 4 of [[replaceLeaves]]. */
+  private def applyStage(spark: SparkSession, fs: FileSystem, root: Path,
+      stage: Path, leaves: Seq[String]): Unit = {
+    val conf = spark.sessionState.newHadoopConf()
+    leaves.foreach { rel =>
+      val live = new Path(root, rel)
+      val staged = new Path(stage, rel)
+      require(!fs.exists(live) || fs.delete(live, true),
+        s"could not delete $live")
+      if (fs.exists(staged))
+        require(FileUtil.copy(fs, staged, fs, live, false, conf),
+          s"could not copy $staged to $live")
+    }
+    fs.delete(new Path(stage, LeafManifest), false)
+    fs.delete(stage, true)
   }
 }

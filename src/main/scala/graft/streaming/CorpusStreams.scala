@@ -548,8 +548,9 @@ object CorpusStreams {
     * identical to a from-scratch build over the survivors; omit it
     * for the conservative compliance-safe over-delete). The curated
     * OUTPUT lake is partition-structured and drops via
-    * [[graft.fred.io.LakeIO.deleteWhere]] with a doc predicate — not
-    * duplicated here.
+    * [[graft.fred.io.LakeIO.deleteWhere]] with a doc predicate (only
+    * the leaves holding matches are replaced, through its staged
+    * leaf-replace commit) — not duplicated here.
     *
     * The saved SKETCH monitors (HLL/CMS/Bloom/MG/GK) admit NO exact
     * per-key delete — lossy folds keep no per-key residue (see

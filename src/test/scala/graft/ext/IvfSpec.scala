@@ -1,7 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.functions._
-import graft.SparkSpec
+import graft.{FaultFs, SparkSpec}
 
 class IvfSpec extends SparkSpec {
 
@@ -207,88 +207,146 @@ class IvfSpec extends SparkSpec {
       s"a full erase must leave no cluster partitions, found: ${left.toSeq}")
   }
 
+  /** A local saved index over `corpus`, the template the crash tests
+    * copy onto the fault-injecting filesystem. */
+  private def savedTemplate(corpus: org.apache.spark.sql.DataFrame,
+      nClusters: Int, filesPerCluster: Int = 1): String = {
+    FaultFs.register(spark)
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_ivf_tpl").toString + "/ivf"
+    val index = Ivf.build(corpus, "vec_id", "embedding", nClusters)
+    Ivf.save(index.copy(assigned = index.assigned.repartition(filesPerCluster)),
+      root)
+    root
+  }
+
+  private def savedIds(root: String): Seq[Long] = {
+    import spark.implicits._
+    Ivf.load(spark, root).assigned.select($"neighbor_id".cast("long"))
+      .as[Long].collect().toSeq.sorted
+  }
+
+  /** Dot-entries of a saved index root: a leaf-replace stage, if left. */
+  private def stages(root: String): Seq[java.io.File] =
+    new java.io.File(new java.net.URI(root).getPath).listFiles().toSeq
+      .filter(_.getName.startsWith("."))
+
+  /** Cluster partitions holding data files. */
+  private def clusterDirs(root: String): Set[String] =
+    new java.io.File(new java.net.URI(s"$root/assigned").getPath).listFiles()
+      .filter(d => d.getName.startsWith("cluster=") &&
+        d.list().exists(_.endsWith(".parquet")))
+      .map(_.getName).toSet
+
   test("deleteFromSaved crash protocol: stamped stage re-commits from staged copy; unstamped stage discards (r17 ADVICE #2)") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ivf_crash").toString + "/ivf"
-    Ivf.save(Ivf.build(embeddings, "vec_id", "embedding", nClusters = 8), root)
-    val allIds = embeddings.select($"vec_id").as[Long].collect().toSet
-    // --- unstamped stage (crash BEFORE the commit point): the live
-    // layout was never touched — heal discards the stage
-    val tmp = SketchState.sibling(s"$root/assigned", ".erase_tmp")
-    val fs = tmp.getFileSystem(spark.sessionState.newHadoopConf())
-    fs.mkdirs(tmp) // junk, no _AFFECTED marker
-    val intact = Ivf.load(spark, root) // heals on load
-    assert(!fs.exists(tmp), "an unstamped stage must be discarded")
-    assert(intact.assigned.count() == allIds.size.toLong,
-      "the live layout must be untouched")
-
-    // --- stamped stage with a crash MID-COMMIT: replicate the commit
-    // point exactly (survivors staged + _AFFECTED published), then
-    // simulate Spark's dynamic-overwrite delete-before-rename crash by
-    // removing one affected partition dir — the stage holds the ONLY
-    // copy of that partition's survivors
+    val tpl = savedTemplate(embeddings, nClusters = 8)
+    val allIds = embeddings.select($"vec_id").as[Long].collect().toSeq.sorted
     val del = embeddings.filter(col("vec_id") % 7 === 0).select("vec_id")
     val delIds = del.as[Long].collect().toSet
-    val assigned = spark.read.parquet(s"$root/assigned")
-    val affected = assigned
-      .join(del.withColumnRenamed("vec_id", "neighbor_id"),
-        Seq("neighbor_id"), "left_semi")
-      .select(col("cluster").cast("int")).distinct().as[Int].collect().sorted
-    assert(affected.nonEmpty, "fixture needs at least one affected cluster")
-    assigned.filter(col("cluster").isInCollection(affected.toSeq))
-      .join(del.withColumnRenamed("vec_id", "neighbor_id"),
-        Seq("neighbor_id"), "left_anti")
-      .write.parquet(tmp.toString)
-    SuffixDedup.writeMarkerAtomic(fs, tmp, "_AFFECTED",
-      affected.mkString(","))
-    // the simulated crash: one affected partition's dir already deleted
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$root/assigned/cluster=${affected.head}"), true)
+    def erase(root: String): Unit = Ivf.deleteFromSaved(spark, root, del, "vec_id")
+    val trace = FaultFs.traceOf(erase(FaultFs.freshCopy(spark, tpl)))
+    val publish = trace.indexWhere { case (call, p) =>
+      call == "rename" && p.endsWith("._LEAVES.tmp") }
+    val firstLiveDelete = trace.indexWhere { case (call, p) =>
+      call == "delete" && p.matches(".*/ivf/assigned/cluster=\\d+") }
+    assert(publish >= 0 && firstLiveDelete > publish)
+    // --- unstamped stage (crash AT the commit point, the manifest
+    // rename): the live layout was never touched — heal discards the
+    // complete but unstamped stage
+    val early = FaultFs.freshCopy(spark, tpl)
+    assert(FaultFs.crashAt(spark, publish + 1)(erase(early)))
+    assert(stages(early).nonEmpty, "fixture: the stage must remain")
+    assert(savedIds(early) == allIds, "the live layout must be untouched")
+    assert(stages(early).isEmpty, "an unstamped stage must be discarded")
+    // --- stamped stage with a crash MID-COMMIT: one affected
+    // cluster's live dir already deleted — the stage holds the ONLY
+    // copy of that cluster's survivors
+    val mid = FaultFs.freshCopy(spark, tpl)
+    assert(FaultFs.crashAt(spark, firstLiveDelete + 2)(erase(mid)))
+    assert((clusterDirs(tpl) -- clusterDirs(mid)).size == 1,
+      "fixture: one affected cluster must be missing from the live layout")
     // heal via load: the commit re-runs FROM THE STAGE — that
-    // partition's survivors come back, deleted ids are gone everywhere
-    val healed = Ivf.load(spark, root)
-    val ids = healed.assigned.select($"neighbor_id".cast("long"))
-      .as[Long].collect().toSet
-    assert(ids == allIds.diff(delIds),
+    // cluster's survivors come back, deleted ids are gone everywhere
+    val healed = savedIds(mid)
+    assert(healed == allIds.filterNot(delIds),
       "heal must finish the erase from the staged survivors — " +
         "no lost survivors, no resurrected deletes")
-    assert(!fs.exists(tmp), "the stage is discarded only after the commit lands")
+    assert(stages(mid).isEmpty, "the stage is discarded only after the commit lands")
     // re-delivering the erase after the heal changes nothing
-    Ivf.deleteFromSaved(spark, root, del, "vec_id")
-    assert(Ivf.load(spark, root).assigned.count() == ids.size.toLong)
+    erase(mid)
+    assert(savedIds(mid) == healed)
   }
 
   test("marker-first stage discard: a crash mid stage-delete leaves a marker-less partial stage the heal discards (r18 ADVICE)") {
-    import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_ivf_mfirst").toString + "/ivf"
-    Ivf.save(Ivf.build(embeddings, "vec_id", "embedding", nClusters = 8), root)
+    val tpl = savedTemplate(embeddings, nClusters = 8)
     val del = embeddings.filter(col("vec_id") % 7 === 0).select("vec_id")
-    Ivf.deleteFromSaved(spark, root, del, "vec_id") // commit fully lands
-    val committed = Ivf.load(spark, root).assigned
-      .select($"neighbor_id".cast("long")).as[Long].collect().toSet
-    // the post-fix crash window: commitStagedErase drops the
-    // _AFFECTED marker FIRST (single file, effectively atomic), then
-    // the JVM dies mid stage-dir delete — leaving a marker-LESS
-    // PARTIAL stage (some staged files already gone) beside the
-    // fully-committed layout. Replicate it: a stage holding only ONE
-    // cluster's survivor rows and no marker. Under the old
-    // marker-LAST order this partial stage would still carry the
-    // marker naming EVERY affected cluster, and the heal would
-    // re-commit from it — reading the lost clusters as emptied and
-    // dropping their live partitions (silent survivor loss).
-    val tmp = SketchState.sibling(s"$root/assigned", ".erase_tmp")
-    val fs = tmp.getFileSystem(spark.sessionState.newHadoopConf())
-    val assigned = spark.read.parquet(s"$root/assigned")
-    val oneCluster = assigned.select(col("cluster").cast("int"))
-      .distinct().limit(1).as[Int].collect().head
-    assigned.filter(col("cluster") === oneCluster)
-      .write.parquet(tmp.toString)
-    val healed = Ivf.load(spark, root) // heal: marker-less ⇒ discard
-    assert(!fs.exists(tmp), "a marker-less partial stage must be discarded")
-    assert(healed.assigned.select($"neighbor_id".cast("long"))
-      .as[Long].collect().toSet == committed,
+    def erase(root: String): Unit = Ivf.deleteFromSaved(spark, root, del, "vec_id")
+    val trace = FaultFs.traceOf(erase(FaultFs.freshCopy(spark, tpl)))
+    val root = FaultFs.freshCopy(spark, tpl)
+    // the discard deletes the manifest FIRST (one file, effectively
+    // atomic), then the stage dir — the op's last call. Crash there
+    // and model a crash INSIDE that non-atomic dir delete by removing
+    // one staged cluster: a manifest-LESS PARTIAL stage beside the
+    // fully-committed layout. Were the manifest deleted last, this
+    // partial stage would still name EVERY affected cluster, and the
+    // heal would apply it — reading the lost cluster as emptied and
+    // dropping its live partition (silent survivor loss).
+    assert(trace.last._1 == "delete")
+    assert(FaultFs.crashAt(spark, trace.size)(erase(root)))
+    val Seq(stage) = stages(root)
+    val staged = stage.listFiles().filter(_.getName.startsWith("cluster="))
+    assert(staged.nonEmpty && !stage.list().contains("_LEAVES"),
+      "fixture: a complete stage whose manifest is gone")
+    org.apache.commons.io.FileUtils.deleteDirectory(staged.head)
+    val committed = spark.read.parquet(s"$root/assigned")
+      .select(col("neighbor_id").cast("long")).collect().map(_.getLong(0))
+      .toSeq.sorted
+    assert(savedIds(root) == committed, // heal: manifest-less ⇒ discard
       "the committed layout must be untouched — no survivor loss")
+    assert(stages(root).isEmpty, "a manifest-less partial stage must be discarded")
+  }
+
+  test("deleteFromSaved survives a crash at every filesystem step") {
+    import spark.implicits._
+    val corpus = embeddings.filter(col("vec_id") < 100)
+    val tpl = savedTemplate(corpus, nClusters = 4)
+    val before = corpus.select($"vec_id").as[Long].collect().toSeq.sorted
+    val del = corpus.filter(col("vec_id") % 5 === 0).select("vec_id")
+    val after = before.filterNot(del.as[Long].collect().toSet)
+    def erase(root: String): Unit = Ivf.deleteFromSaved(spark, root, del, "vec_id")
+    val steps = FaultFs.traceOf(erase(FaultFs.freshCopy(spark, tpl))).size
+    (1 to steps).foreach { n =>
+      val root = FaultFs.freshCopy(spark, tpl)
+      assert(FaultFs.crashAt(spark, n)(erase(root)),
+        s"the fault at call $n of $steps must surface")
+      val seen = savedIds(root) // load heals
+      assert(seen == before || seen == after,
+        s"crash at call $n of $steps: the index is neither the old nor the new one")
+      erase(root)
+      assert(savedIds(root) == after, s"crash at call $n: re-delivery must converge")
+      assert(stages(root).isEmpty, s"crash at call $n: stage left behind")
+    }
+    info(s"$steps crash points")
+  }
+
+  test("a crashed compactFragmented on assigned/ heals in appendToSaved and load: no vector lost") {
+    import spark.implicits._
+    val corpus = embeddings.filter(col("vec_id") < 100)
+    val tpl = savedTemplate(corpus, nClusters = 4, filesPerCluster = 3)
+    val batch = embeddings.filter(col("vec_id") >= 100 && col("vec_id") < 120)
+    val want = embeddings.filter(col("vec_id") < 120).select($"vec_id")
+      .as[Long].collect().toSeq.sorted
+    def compact(root: String): Unit = graft.fred.io.LakeIO.compactFragmented(
+      spark, s"$root/assigned", targetBytes = 64L * 1024 * 1024, minFiles = 1,
+      partitionCols = Seq("cluster"))
+    val steps = FaultFs.traceOf(compact(FaultFs.freshCopy(spark, tpl))).size
+    (1 to steps).foreach { n =>
+      val root = FaultFs.freshCopy(spark, tpl)
+      FaultFs.crashAt(spark, n)(compact(root))
+      Ivf.appendToSaved(spark, root, batch, "vec_id", "embedding")
+      assert(savedIds(root) == want, s"crash at call $n of $steps: vectors lost")
+    }
+    info(s"$steps crash points")
   }
 }

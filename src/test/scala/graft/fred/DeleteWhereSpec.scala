@@ -2,7 +2,7 @@ package graft.fred
 
 import org.apache.spark.sql.functions._
 
-import graft.SparkSpec
+import graft.{FaultFs, SparkSpec}
 import graft.fred.io.LakeIO
 
 /** Targeted delete propagation (right-to-be-forgotten): only
@@ -109,50 +109,91 @@ class DeleteWhereSpec extends SparkSpec {
     assert(spark.read.parquet(root).filter(col("user") === "u2").count() == 0L)
   }
 
-  test("healPartitionSwaps: a missing leaf restores from its aside; a stale aside purges (erased rows leave no hidden copy)") {
-    val root = freshLake()
-    val all = spark.read.parquet(root).count()
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-    // crash between the two renames: the leaf's ONLY copy is the
-    // invisible aside — every read silently misses the partition
-    val leaf = new org.apache.hadoop.fs.Path(
-      s"$root/indicator=A/observation_year=2023")
-    val aside = new org.apache.hadoop.fs.Path(
-      leaf.getParent, ".delete_old_" + leaf.getName)
-    assert(fs.rename(leaf, aside), "fixture: strand the leaf in its aside")
-    assert(spark.read.parquet(root).count() < all,
+  test("partition values Spark escapes on write are found: indicator \"A:B\"") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_delete_esc").toString + "/lake"
+    LakeIO.writeParquet(
+      Seq(("A:B", 2023, "u1"), ("A:B", 2023, "u2"), ("C", 2023, "u1"))
+        .toDF("indicator", "observation_year", "user"),
+      root, parts)
+    val (nPart, nRows) = LakeIO.deleteWhere(spark, root,
+      col("indicator") === "A:B" && col("user") === "u1", parts)
+    assert(nPart == 1L && nRows == 1L)
+    val left = spark.read.parquet(root).select("indicator", "user")
+      .as[(String, String)].collect().toSet
+    assert(left == Set(("A:B", "u2"), ("C", "u1")))
+  }
+
+  test("a null partition value (__HIVE_DEFAULT_PARTITION__) is found and rewritten") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft_delete_nullpart").toString + "/lake"
+    LakeIO.writeParquet(
+      Seq((null, 2023, "u1"), (null, 2023, "u2"), ("C", 2023, "u1"))
+        .toDF("indicator", "observation_year", "user"),
+      root, parts)
+    val (nPart, nRows) = LakeIO.deleteWhere(spark, root,
+      col("indicator").isNull && col("user") === "u1", parts)
+    assert(nPart == 1L && nRows == 1L)
+    val left = spark.read.parquet(root).select("indicator", "user")
+      .as[(String, String)].collect().toSet
+    assert(left == Set((null, "u2"), ("C", "u1")))
+  }
+
+  test("a crashed delete heals forward; erased rows keep no hidden copy") {
+    FaultFs.register(spark)
+    val tpl = freshLake()
+    val pred = col("user") === "u1" && col("indicator") === "A" &&
+      col("observation_year") === 2023
+    // the commit's mutating calls, in order, from a fault-free run
+    val trace = FaultFs.traceOf(
+      LakeIO.deleteWhere(spark, FaultFs.freshCopy(spark, tpl), pred, parts))
+    val liveDelete = trace.indexWhere { case (call, p) =>
+      call == "delete" && p.endsWith("/lake/indicator=A/observation_year=2023") }
+    val manifestDelete = trace.indexWhere { case (call, p) =>
+      call == "delete" && p.endsWith("/_LEAVES") }
+    assert(liveDelete >= 0 && manifestDelete > liveDelete)
+    def rows(root: String) = spark.read.parquet(root).count()
+    // nothing but the lake beside it: no stage, no hidden copy
+    def residue(root: String) =
+      new java.io.File(new java.net.URI(root).getPath).getParentFile
+        .list().toSeq.filterNot(_ == "lake")
+    val all = rows(tpl)
+    val afterDelete = all - 4L // u1 on days 1, 4, 7 and 10 of 2023
+    // crash right after the live leaf is deleted: its only copy is the
+    // stamped stage, and every read silently misses the partition
+    val stranded = FaultFs.freshCopy(spark, tpl)
+    FaultFs.crashAt(spark, liveDelete + 2)(
+      LakeIO.deleteWhere(spark, stranded, pred, parts))
+    assert(rows(stranded) < afterDelete,
       "fixture: the stranded partition must be invisible to reads")
-    val (restored, _) = LakeIO.healPartitionSwaps(spark, root)
-    assert(restored == 1L)
-    assert(spark.read.parquet(root).count() == all,
-      "the restored partition must be visible again")
-    // crash between a landed swap and its aside-drop: the aside holds
-    // the PRE-delete partition — for the right-to-be-forgotten op,
-    // the deleted rows' last on-disk copy. The next op's heal purges.
-    // staged OUTSIDE the lake root: a non-dot dir inside it would
-    // break Spark's partition discovery
-    val snapshot = new org.apache.hadoop.fs.Path(
-      root + "_pre_delete_snapshot")
-    org.apache.hadoop.fs.FileUtil.copy(fs, leaf, fs, snapshot, false,
-      spark.sessionState.newHadoopConf())
-    LakeIO.deleteWhere(spark, root,
-      col("user") === "u1" && col("indicator") === "A" &&
-        col("observation_year") === 2023, parts)
-    val afterDelete = spark.read.parquet(root).count()
-    assert(fs.rename(snapshot, aside), "fixture: plant the stale aside")
-    val (_, purged) = LakeIO.healPartitionSwaps(spark, root)
-    assert(purged == 1L && !fs.exists(aside),
-      "a stale aside beside a live leaf must purge")
-    assert(spark.read.parquet(root).count() == afterDelete,
-      "the live layout stays post-delete")
+    LakeIO.healReplaceLeaves(spark, stranded)
+    assert(rows(stranded) == afterDelete,
+      "the partition must be visible again, with the delete applied")
+    assert(residue(stranded).isEmpty)
+    // crash after the apply landed, before the discard: the stamped
+    // stage still sits beside the lake; the next heal drops it
+    val landed = FaultFs.freshCopy(spark, tpl)
+    FaultFs.crashAt(spark, manifestDelete + 1)(
+      LakeIO.deleteWhere(spark, landed, pred, parts))
+    assert(residue(landed).nonEmpty, "fixture: the stage must remain")
+    val stage = new java.io.File(new java.net.URI(landed).getPath).getParent +
+      "/" + residue(landed).head
+    assert(spark.read.parquet(stage).filter(pred).isEmpty,
+      "the stage holds survivors only, never an erased row")
+    LakeIO.healReplaceLeaves(spark, landed)
+    assert(residue(landed).isEmpty, "a landed commit's stage must go")
+    assert(rows(landed) == afterDelete, "the live layout stays post-delete")
+    assert(spark.read.parquet(landed).filter(pred).isEmpty)
     // the ops self-heal: strand the leaf again, then let deleteWhere's
     // own entry heal before it probes (a no-op predicate)
-    assert(fs.rename(leaf, aside))
-    val (nPart, nRows) = LakeIO.deleteWhere(spark, root,
+    val again = FaultFs.freshCopy(spark, tpl)
+    FaultFs.crashAt(spark, liveDelete + 2)(
+      LakeIO.deleteWhere(spark, again, pred, parts))
+    val (nPart, nRows) = LakeIO.deleteWhere(spark, again,
       col("user") === "nobody", parts)
     assert(nPart == 0L && nRows == 0L)
-    assert(spark.read.parquet(root).count() == afterDelete,
+    assert(rows(again) == afterDelete,
       "deleteWhere must heal the stranded partition before probing")
+    assert(residue(again).isEmpty)
   }
 }

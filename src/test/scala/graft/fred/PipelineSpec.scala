@@ -210,6 +210,49 @@ class PipelineSpec extends SparkSpec {
     assert(n2 == 0L && b2 == 3L && a2 == 3L, s"second run no-op: $n2 $b2 $a2")
   }
 
+  test("compactFragmented neither counts nor touches a crashed write's _temporary files") {
+    val root = java.nio.file.Files.createTempDirectory("graft-tmpcensus").toString + "/lake"
+    (0 until 200).map(i => ("IND0", 2024, 1, i.toLong, s"v$i"))
+      .toDF("indicator", "observation_year", "observation_month", "seq", "payload")
+      .repartition(8).write
+      .partitionBy("indicator", "observation_year", "observation_month")
+      .parquet(root)
+    val leaf = new java.io.File(
+      s"$root/indicator=IND0/observation_year=2024/observation_month=1")
+    // a crashed write's uncommitted attempt, in a partition-shaped dir
+    val attempt = new java.io.File(root, "_temporary/0/_temporary/" +
+      "attempt_0001/indicator=IND0/observation_year=2024/observation_month=1")
+    assert(attempt.mkdirs())
+    leaf.listFiles().filter(_.getName.endsWith(".parquet")).foreach { f =>
+      java.nio.file.Files.copy(f.toPath, new java.io.File(attempt, f.getName).toPath)
+    }
+    def planted = attempt.listFiles().map(f => f.getName -> f.length).toMap
+    val plantedBefore = planted
+    assert(plantedBefore.size == 8, "fixture: 8 uncommitted part files")
+    val (nPart, b, a) = graft.fred.io.LakeIO.compactFragmented(
+      spark, root, targetBytes = 64L * 1024 * 1024, minFiles = 5)
+    assert(nPart == 1L && b == 8L && a == 1L,
+      s"only the committed leaf counts and compacts: $nPart $b -> $a")
+    assert(planted == plantedBefore, "uncommitted attempt files stay untouched")
+    assert(spark.read.parquet(root).count() == 200L)
+  }
+
+  test("compactFragmented round-trips leaves Spark would re-type: null and 007") {
+    val root = java.nio.file.Files.createTempDirectory("graft-retype").toString + "/lake"
+    val parts = Seq("indicator", "observation_year")
+    Seq[String](null, "007").foreach { ind =>
+      (0 until 40).map(i => (ind, 2024, i.toLong)).toDF("indicator", "observation_year", "seq")
+        .repartition(6).write.mode("append").partitionBy(parts: _*).parquet(root)
+    }
+    val (nPart, b, a) = graft.fred.io.LakeIO.compactFragmented(
+      spark, root, targetBytes = 64L * 1024 * 1024, minFiles = 2, parts)
+    assert(nPart == 2L && b == 12L && a == 2L, s"$nPart $b -> $a")
+    assert(new java.io.File(root).list().filter(_.startsWith("indicator=")).toSet ==
+      Set("indicator=__HIVE_DEFAULT_PARTITION__", "indicator=007"),
+      "each leaf keeps its directory")
+    assert(spark.read.parquet(root).count() == 80L)
+  }
+
   test("LakeIO writes overwrite only their partitions and leave the session's overwrite mode alone") {
     val key = "spark.sql.sources.partitionOverwriteMode"
     val saved = spark.conf.get(key)
